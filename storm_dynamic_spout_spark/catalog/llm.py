@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.catalog.registry import query, t
-from storm_dynamic_spout_spark.operators.skew import fan_out_narrow, shared_subtree
+from storm_dynamic_spout_spark.operators.skew import fan_out_narrow
 from storm_dynamic_spout_spark.operators import dedup as D
 from storm_dynamic_spout_spark.operators import similarity as S
 from storm_dynamic_spout_spark.operators import text as X
@@ -2402,9 +2402,8 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # deterministic subtree (operators/dedup.py DETERMINISM note);
-    # corpus-scale: shared_subtree dial (fault-tolerance, r16)
-    scored = shared_subtree(scored)
+    # deterministic subtree (operators/dedup.py DETERMINISM note)
+    scored = scored.localCheckpoint(eager=False)
     within = F.sum("n_tokens").over(
         Window.partitionBy("__b")
         .orderBy(F.desc("quality"), "doc_id")
@@ -5887,10 +5886,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str, iters: int):
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    # deterministic subtree (operators/dedup.py DETERMINISM note).
-    # corpus-scale materialization: mechanism is the shared_subtree
-    # deployment dial (fault-tolerance trade-offs measured r16)
-    w = shared_subtree(wc.select("n", X.chars(F.col("word")).alias("syms")))
+    w = wc.select("n", X.chars(F.col("word")).alias("syms"))
+    # deterministic subtree (operators/dedup.py DETERMINISM note)
+    w = w.localCheckpoint(eager=False)
     tops = []
     for i in range(1, iters + 1):
         # size>=2 guard: Spark's sequence(1, 0) DESCENDS ([1, 0]), so a
@@ -5936,9 +5934,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str, iters: int):
                 ).alias("syms"),
             )
         )
-        # deterministic subtree (operators/dedup.py DETERMINISM note);
-        # corpus-scale: shared_subtree dial (fault-tolerance, r16)
-        w = shared_subtree(w)
+        # deterministic subtree (operators/dedup.py DETERMINISM note)
+        w = w.localCheckpoint(eager=False)
     return w, tops
 
 

@@ -56,15 +56,33 @@ DEFAULTS: dict[str, Any] = {
     "metrics.jsonl_path": None,  # required when metrics.recorder=jsonl
     "metrics.prom_path": None,  # required when metrics.recorder=prometheus
     # --- Spark execution defaults ----------------------------------------
-    "spark.master": os.environ.get(
-        "SPARK_GRAFT_MASTER",
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-    ),
+    # (static, so the generated docs are host-independent; the
+    # SPARK_GRAFT_* environment overrides apply per EngineConfig)
+    "spark.master": "local[32]",
     "spark.app_name": "storm_dynamic_spout_spark",
-    "spark.shuffle_partitions": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+    "spark.shuffle_partitions": 32,
     "spark.session_timezone": "UTC",
-    "spark.driver_memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver_memory": "48g",
 }
+
+
+def _env_overrides() -> dict[str, Any]:
+    """Spark execution settings from the environment, read when an
+    :class:`EngineConfig` is built: ``SPARK_GRAFT_CPUS`` sets the local
+    core count and shuffle partitions, ``SPARK_GRAFT_MASTER`` the master
+    URL (winning over the core count), ``SPARK_GRAFT_DRIVER_MEM`` the
+    driver heap."""
+    env = os.environ
+    out: dict[str, Any] = {}
+    if env.get("SPARK_GRAFT_CPUS"):
+        out["spark.master"] = f"local[{env['SPARK_GRAFT_CPUS']}]"
+        out["spark.shuffle_partitions"] = int(env["SPARK_GRAFT_CPUS"])
+    if env.get("SPARK_GRAFT_MASTER"):
+        out["spark.master"] = env["SPARK_GRAFT_MASTER"]
+    if env.get("SPARK_GRAFT_DRIVER_MEM"):
+        out["spark.driver_memory"] = env["SPARK_GRAFT_DRIVER_MEM"]
+    return out
+
 
 #: One-line documentation per config key — the annotation-driven config
 #: docs of the reference (``documentation/ConfigDocumentation.java``);
@@ -89,7 +107,7 @@ CONFIG_DOCS: dict[str, str] = {
     "metrics.prom_path": "Pull file of the prometheus recorder (textfile-collector exposition format)",
     "spark.master": "Spark master URL (env SPARK_GRAFT_MASTER / SPARK_GRAFT_CPUS)",
     "spark.app_name": "Spark application name",
-    "spark.shuffle_partitions": "spark.sql.shuffle.partitions for the session",
+    "spark.shuffle_partitions": "spark.sql.shuffle.partitions for the session (env SPARK_GRAFT_CPUS)",
     "spark.session_timezone": "Session timezone (UTC keeps timestamp semantics engine-portable)",
     "spark.driver_memory": "Driver JVM heap (env SPARK_GRAFT_DRIVER_MEM)",
 }
@@ -103,6 +121,7 @@ class EngineConfig:
 
     def __post_init__(self) -> None:
         merged = dict(DEFAULTS)
+        merged.update(_env_overrides())
         merged.update(self.values)
         self.values = merged
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from storm_dynamic_spout_spark.operators.skew import fan_out_narrow, shared_subtree
+from storm_dynamic_spout_spark.operators.skew import fan_out_narrow
 from storm_dynamic_spout_spark.operators.text import (
     content_fingerprint,
     distinct_tokens,
@@ -307,13 +307,10 @@ def minhash_near_dups(
     # text per consumer (was: 20 file scans / 16 minhash evaluations
     # per run — Catalyst can't dedupe differently-aliased subtrees)
     # deterministic subtree (DETERMINISM note above); fanned out so
-    # the tokenize pass and every checkpoint consumer run wide.
-    # corpus-scale: shared_subtree dial (fault-tolerance, r16)
-    tok = shared_subtree(
-        fan_out_narrow(df).select(
-            F.col(id_col), distinct_tokens(F.col(text_col)).alias("__toks")
-        )
-    )
+    # the tokenize pass and every checkpoint consumer run wide
+    tok = fan_out_narrow(df).select(
+        F.col(id_col), distinct_tokens(F.col(text_col)).alias("__toks")
+    ).localCheckpoint(eager=False)
     keyed = tok.select(
         F.col(id_col),
         F.md5(F.to_json(F.array_sort(F.col("__toks")))).alias("__tk"),
@@ -326,11 +323,10 @@ def minhash_near_dups(
     # filter below — without the checkpoint Catalyst re-evaluates the
     # exact-key subtree (md5 over the sorted token array, corpus-wide)
     # plus the groups exchange+aggregate once per aliased copy
-    # deterministic subtree (DETERMINISM note above); corpus-scale:
-    # shared_subtree dial (fault-tolerance, r16)
-    mapping = shared_subtree(
-        keyed.join(groups, "__tk").select(F.col(id_col), "__rep", "__gn")
-    )
+    # deterministic subtree (DETERMINISM note above)
+    mapping = keyed.join(groups, "__tk").select(
+        F.col(id_col), "__rep", "__gn"
+    ).localCheckpoint(eager=False)
     # a group's rep is its min member id, so reps are exactly the rows
     # with id == rep — read them from the checkpointed mapping instead
     # of re-deriving groups

@@ -23,10 +23,9 @@ Engine mapping:
   first (anti-join on id), so a FULLY COMMITTED batch re-delivers as a
   complete no-op; a crash MID-batch (match log appended, index append
   lost) re-delivers under the same deterministic batch key, and the
-  match append is key-guarded — the log is partitioned by
-  ``__batch_key``, so the landed-check is a directory-name lookup and
-  re-delivery completes exactly the missing index append without
-  duplicating match rows (the bm25_stream guard pattern).  Surviving
+  match append is key-guarded (streaming/batch_log.py: the landed
+  check is a directory-name lookup), so re-delivery completes exactly
+  the missing index append without duplicating match rows.  Surviving
   NEW vectors bucket-join against the PRE-BATCH index, score exact
   cosine, keep top-k per query (rank by rounded cosine desc, then
   neighbor id — integer-stable across engines), append matches to the
@@ -57,6 +56,7 @@ from storm_dynamic_spout_spark.operators.similarity import (
     norm,
     srp_planes,
 )
+from storm_dynamic_spout_spark.streaming.batch_log import BatchLog, batch_key
 
 #: Coarse-bucket geometry: 4 sign bits → 16 buckets over the 64-dim
 #: fixture embeddings.  Widen n_planes as the corpus grows.
@@ -89,43 +89,23 @@ class StreamingAnnIndex:
         dim: int = ANN_STREAM_DIM,
         n_planes: int = ANN_STREAM_PLANES,
     ) -> None:
-        self.index_dir = os.path.join(workdir, "index")
-        self.match_dir = os.path.join(workdir, "matches")
+        self.index = BatchLog(os.path.join(workdir, "index"))
+        self.match_log = BatchLog(os.path.join(workdir, "matches"))
+        self.index_dir = self.index.path
+        self.match_dir = self.match_log.path
         self.id_col = id_col
         self.vec_col = vec_col
         self.k = k
         self.dim = dim
         self.n_planes = n_planes
-        os.makedirs(self.index_dir, exist_ok=True)
-        os.makedirs(self.match_dir, exist_ok=True)
-        # heal a crash inside a previous compact_index swap — without
-        # this, the makedirs above would present a silently-empty index
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.index_dir)
 
     # -- state ---------------------------------------------------------------
 
-    def _has_files(self, d: str) -> bool:
-        # the match log is partitioned by __batch_key (subdirs), the
-        # index dir is flat — walk covers both
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for f in files
-        )
-
     def index_df(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.index_dir):
-            return None
-        return spark.read.parquet(self.index_dir)
+        return self.index.read(spark)
 
     def matches(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.match_dir):
-            return None
-        return spark.read.parquet(self.match_dir)
+        return self.match_log.read(spark)
 
     def compact_index(self, spark: SparkSession, target_files: int = 1) -> int:
         """Merge the per-batch index files (one parquet append per
@@ -135,19 +115,13 @@ class StreamingAnnIndex:
         ``process_batch`` would read the directory mid-swap.  Returns
         the row count after compaction.
 
-        Crash-safe via streaming/dirswap.py: the constructor heals any
-        interrupted swap, so a crash mid-compaction can never surface
-        as an empty index on restart."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
+        Crash-safe: ``BatchLog.replace`` swaps, and the constructor
+        heals an interrupted swap, so a crash mid-compaction can never
+        surface as an empty index on restart."""
         idx = self.index_df(spark)
         if idx is None:
             return 0
-        merged = idx.dropDuplicates(["__id"]).repartition(target_files)
-        swap_publish(
-            self.index_dir,
-            lambda tmp: merged.write.mode("overwrite").parquet(tmp),
-        )
+        self.index.replace(idx.dropDuplicates(["__id"]).repartition(target_files))
         return self.index_df(spark).count()
 
     # -- the per-batch step --------------------------------------------------
@@ -166,10 +140,10 @@ class StreamingAnnIndex:
         The match log materializes BEFORE the index append so its
         lineage reads the pre-append index files; already-indexed ids
         are dropped first, so a FULLY COMMITTED batch re-delivers as a
-        complete no-op, and the match append is guarded by a
-        deterministic batch key (partition-dir lookup) so a crash
-        between the two appends re-delivers without duplicating match
-        rows — the index append runs LAST as the commit point."""
+        complete no-op, and the match append is guarded by the batch
+        key (streaming/batch_log.py) so a crash between the two appends
+        re-delivers without duplicating match rows — the index append
+        runs LAST as the commit point."""
         spark = batch_df.sparkSession
         new = self._prepared(batch_df)
         seen = self.index_df(spark)
@@ -182,24 +156,12 @@ class StreamingAnnIndex:
         # key aggregate below materializes it BEFORE any append runs —
         # one driver job instead of three (r15 verdict item 6)
         new = new.localCheckpoint(eager=False)
-        # deterministic batch identity over the DISTINCT new ids (one
-        # row per id here, distinct by construction — the bm25_stream
-        # convention): a crash between the match append and the index
-        # append re-delivers under the same key, and the partition-dir
-        # guard below skips the already-landed match append instead of
-        # duplicating it
-        key = (
-            new.select("__id")
-            .distinct()
-            .agg(F.expr("bit_xor(xxhash64(__id))"))
-            .first()[0]
-        )
+        # a crash between the match append and the index append
+        # re-delivers under the same key, and the match log skips the
+        # already-landed append instead of duplicating it
+        key = batch_key(new, "__id")
         if key is None:
             return  # fully-committed re-delivery (or an empty batch)
-        if seen is not None and os.path.isdir(
-            os.path.join(self.match_dir, f"__batch_key={key}")
-        ):
-            seen = None  # match rows for this batch already landed
         if seen is not None:
             q = new.select(
                 F.col("__id").alias("query_id"),
@@ -223,10 +185,5 @@ class StreamingAnnIndex:
                     "rank",
                 )
             )
-            (
-                matches.withColumn("__batch_key", F.lit(int(key)).cast("long"))
-                .write.partitionBy("__batch_key")
-                .mode("append")
-                .parquet(self.match_dir)
-            )
-        new.write.mode("append").parquet(self.index_dir)
+            self.match_log.append(matches, key)
+        self.index.append(new)

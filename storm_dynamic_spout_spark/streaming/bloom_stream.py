@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.operators.bloom import _mask_col, _word_col
+from storm_dynamic_spout_spark.streaming.batch_log import BatchLog
 
 #: Stream-scale default geometry: 2^20 bits (128 KiB, ≤16384 words),
 #: 3 bits per key — <1% false positives up to ~100k keys.
@@ -65,31 +66,20 @@ class StreamingBloomFilter:
         m_bits: int = STREAM_M_BITS,
         k_hashes: int = STREAM_K_HASHES,
     ) -> None:
-        self.bitmap_dir = os.path.join(workdir, "bitmap")
+        self.bitmap = BatchLog(os.path.join(workdir, "bitmap"))
+        self.bitmap_dir = self.bitmap.path
         self.key_col = key_col
         self.m_bits = m_bits
         self.k_hashes = k_hashes
-        os.makedirs(self.bitmap_dir, exist_ok=True)
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.bitmap_dir)
 
     # -- state ---------------------------------------------------------------
 
-    def _has_files(self) -> bool:
-        return any(f.endswith(".parquet") for f in os.listdir(self.bitmap_dir))
-
     def bitmap_df(self, spark: SparkSession) -> DataFrame | None:
         """Current bitmap, duplicate words OR-ed (append-log form)."""
-        if not self._has_files():
+        log = self.bitmap.read(spark)
+        if log is None:
             return None
-        return (
-            spark.read.parquet(self.bitmap_dir)
-            .groupBy("__word")
-            .agg(F.bit_or("__mask").alias("__mask"))
-        )
+        return log.groupBy("__word").agg(F.bit_or("__mask").alias("__mask"))
 
     def saturation(self, spark: SparkSession) -> float:
         """Fraction of the m bits set — the false-positive-rate
@@ -103,17 +93,11 @@ class StreamingBloomFilter:
     def compact_bitmap(self, spark: SparkSession) -> int:
         """Collapse the append log back to ≤ m/64 rows (crash-safe
         dirswap publish).  Returns the word count after compaction."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         bm = self.bitmap_df(spark)
         if bm is None:
             return 0
-        merged = bm.coalesce(1)
-        swap_publish(
-            self.bitmap_dir,
-            lambda tmp: merged.write.mode("overwrite").parquet(tmp),
-        )
-        return spark.read.parquet(self.bitmap_dir).count()
+        self.bitmap.replace(bm.coalesce(1))
+        return self.bitmap.read(spark).count()
 
     # -- the per-batch step --------------------------------------------------
 
@@ -152,10 +136,7 @@ class StreamingBloomFilter:
                 .drop("__bm")
             )
         out = out.localCheckpoint(eager=True)
-        (
-            out.groupBy("__word")
-            .agg(F.bit_or("__mask").alias("__mask"))
-            .write.mode("append")
-            .parquet(self.bitmap_dir)
+        self.bitmap.append(
+            out.groupBy("__word").agg(F.bit_or("__mask").alias("__mask"))
         )
         return out.drop("__word", "__mask")

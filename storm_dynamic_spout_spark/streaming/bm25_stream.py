@@ -20,8 +20,9 @@ Engine mapping:
 - **Per micro-batch**: documents whose id is already indexed are
   dropped first (anti-join on id), so a fully-committed batch
   re-delivers as a complete no-op; a crash MID-batch re-delivers
-  under the same deterministic batch key, and every append is
-  key-guarded, so re-delivery completes exactly the missing appends
+  under the same batch key, and the match-log and sidecar appends are
+  key-guarded (streaming/batch_log.py), so re-delivery completes
+  exactly the missing appends
   (idempotent under at-least-once in every crash window at the
   job-commit granularity).  Surviving NEW documents expose their
   distinct tokens as query terms, probe the PRE-BATCH postings, and
@@ -61,6 +62,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from storm_dynamic_spout_spark.streaming.batch_log import BatchLog, batch_key
 
 #: Okapi BM25 constants — same values as the batch scorer
 #: (catalog/llm.py BM25_K1/BM25_B) so the two legs rank consistently.
@@ -180,18 +183,18 @@ def score_against_postings(
 class StreamingBm25Index:
     """The persistent postings index + the per-batch match step.
 
-    State layout (round 13 — incremental statistics): alongside the
-    corpus-sized ``postings/`` table live two SIDECAR delta tables,
-    appended once per batch and vastly smaller than the postings —
-    ``stats/`` (one row per batch: new-doc count, new-doc Σdl) and
-    ``df/`` (one row per batch-token: docs added to that posting
-    list).  Probe-time statistics ``(N, Σdl, df)`` are sums over the
-    sidecars, so a micro-batch costs O(batch + probed posting lists +
-    sidecar), NOT O(index) — previously every batch re-scanned the
-    full postings just to recount them, making total work quadratic
-    over a stream's life.  ``compact_index`` rebuilds both sidecars
-    from the postings (the ground truth), collapsing their per-batch
-    rows to one."""
+    State layout (incremental statistics): alongside the corpus-sized
+    ``postings/`` table live two SIDECAR delta tables, appended once
+    per batch under the batch's key partition and vastly smaller than
+    the postings — ``stats/`` (one row per batch: new-doc count, new-doc
+    Σdl) and ``df/`` (one row per batch-token: docs added to that
+    posting list).  Probe-time statistics ``(N, Σdl, df)`` are sums
+    over the sidecars, so a micro-batch costs O(batch + probed posting
+    lists + sidecar), NOT O(index) — re-scanning the full postings to
+    recount them every batch would make total work quadratic over a
+    stream's life.  ``compact_index`` rebuilds both sidecars from the
+    postings (the ground truth), collapsing their per-batch rows to
+    one."""
 
     #: Auto-collapse the sidecar deltas once a state dir accumulates
     #: this many delta files: per-batch rows grow as batches x batch
@@ -209,10 +212,14 @@ class StreamingBm25Index:
         k: int = BM25_STREAM_K,
         sidecar_compact_files: int | None = None,
     ) -> None:
-        self.postings_dir = os.path.join(workdir, "postings")
-        self.match_dir = os.path.join(workdir, "matches")
-        self.stats_dir = os.path.join(workdir, "stats")
-        self.df_dir = os.path.join(workdir, "df")
+        self.postings = BatchLog(os.path.join(workdir, "postings"))
+        self.match_log = BatchLog(os.path.join(workdir, "matches"))
+        self.stats_log = BatchLog(os.path.join(workdir, "stats"))
+        self.df_log = BatchLog(os.path.join(workdir, "df"))
+        self.postings_dir = self.postings.path
+        self.match_dir = self.match_log.path
+        self.stats_dir = self.stats_log.path
+        self.df_dir = self.df_log.path
         self.id_col = id_col
         self.text_col = text_col
         self.k = k
@@ -221,43 +228,20 @@ class StreamingBm25Index:
             if sidecar_compact_files is None
             else sidecar_compact_files
         )
-        for d in (self.postings_dir, self.match_dir, self.stats_dir, self.df_dir):
-            os.makedirs(d, exist_ok=True)
-        # heal a crash inside a previous compact_index swap — without
-        # this, the makedirs above would present a silently-empty index
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        for d in (self.postings_dir, self.stats_dir, self.df_dir):
-            recover_interrupted_swap(d)
 
     # -- state ---------------------------------------------------------------
 
-    def _has_files(self, d: str) -> bool:
-        # the match log is partitioned by __batch_key (subdirs), the
-        # other state dirs are flat — walk covers both
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for f in files
-        )
-
     def postings_df(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.postings_dir):
-            return None
-        return spark.read.parquet(self.postings_dir)
+        return self.postings.read(spark)
 
     def matches(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.match_dir):
-            return None
-        return spark.read.parquet(self.match_dir)
+        return self.match_log.read(spark)
 
     def sidecar_stats(self, spark: SparkSession) -> DataFrame:
         """One-row (__n_docs, __sum_dl) from the stats sidecar — the
         incremental replacement for re-counting the postings."""
         self._heal_sidecars(spark)
-        return spark.read.parquet(self.stats_dir).agg(
+        return self.stats_log.read(spark).agg(
             F.sum("__n_docs").cast("long").alias("__n_docs"),
             F.sum("__sum_dl").cast("long").alias("__sum_dl"),
         )
@@ -266,73 +250,65 @@ class StreamingBm25Index:
         """Per-token (__tok, __df) from the df sidecar deltas."""
         self._heal_sidecars(spark)
         return (
-            spark.read.parquet(self.df_dir)
+            self.df_log.read(spark)
             .groupBy("__tok")
             .agg(F.sum("__df").cast("long").alias("__df"))
         )
 
     def _heal_sidecars(self, spark: SparkSession) -> None:
         """Resume path for a workdir written before the sidecar layout
-        (postings present, sidecar dirs empty — e.g. a round-12 index)
-        or one that crashed between the two sidecar appends: rebuild
-        BOTH sidecars from the postings ground truth before the first
-        probe reads them.  Two directory walks when healthy — no Spark
-        job."""
-        if not self._has_files(self.postings_dir):
+        (postings present, sidecar dirs empty), one whose sidecars were
+        lost, or one whose sidecars are flat files from before they were
+        keyed: rebuild BOTH sidecars from the postings ground truth
+        before the first probe reads them.  A flat file must not stay
+        beside the keyed partitions, because Spark's partition
+        discovery then silently skips it.  Directory listings when
+        healthy — no Spark job."""
+        if not self.postings.n_files():
             return
-        if self._has_files(self.stats_dir) and self._has_files(self.df_dir):
+        logs = (self.stats_log, self.df_log)
+        if all(log.n_files() for log in logs) and not any(
+            f.endswith(".parquet") for log in logs for f in os.listdir(log.path)
+        ):
             return
         self._rebuild_sidecars_from_postings(spark)
 
     def _rebuild_sidecars_from_postings(self, spark: SparkSession) -> None:
         """Rebuild both sidecars from the postings (the ground truth),
-        collapsed to one sentinel-keyed delta row each.  The sentinel
-        key — bit_xor of xxhash64 over the DISTINCT indexed ids — is
-        materialized driver-side FIRST, so both writes are built from
-        literals and never re-read a directory the swap just retired.
-        Shared by compact_index and the empty-sidecar heal path."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
+        collapsed to one delta row per table under a sentinel key — the
+        batch key of all indexed ids.  The sentinel and the stats are
+        materialized driver-side FIRST, so the stats write is built from
+        literals.  Shared by compact_index and the heal path."""
         pos = self.postings_df(spark)
         if pos is None:
             return
+        sentinel = batch_key(pos, "__id")
         row = (
             pos.select("__id", "__dl")
             .distinct()
             .agg(
-                F.expr("bit_xor(xxhash64(__id))").alias("__batch_key"),
                 F.count(F.lit(1)).cast("long").alias("__n_docs"),
                 F.sum("__dl").cast("long").alias("__sum_dl"),
             )
             .first()
         )
-        stats = spark.range(1, numPartitions=1).select(
-            F.lit(int(row["__batch_key"])).cast("long").alias("__batch_key"),
-            F.lit(int(row["__n_docs"])).cast("long").alias("__n_docs"),
-            F.lit(int(row["__sum_dl"])).cast("long").alias("__sum_dl"),
-        )
-        swap_publish(
-            self.stats_dir,
-            lambda tmp: stats.write.mode("overwrite").parquet(tmp),
-        )
+        self.stats_log.replace(self._stats_row(spark, row), key=sentinel)
         dfx = (
             pos.groupBy("__tok")
             # count_distinct, not count: postings are distinct (id, tok)
             # by construction, but the heal path must also be correct on
             # a not-yet-compacted index with a partial duplicate append
             .agg(F.count_distinct("__id").cast("long").alias("__df"))
-            .select(
-                F.lit(int(row["__batch_key"]))
-                .cast("long")
-                .alias("__batch_key"),
-                "__tok",
-                "__df",
-            )
             .coalesce(1)
         )
-        swap_publish(
-            self.df_dir,
-            lambda tmp: dfx.write.mode("overwrite").parquet(tmp),
+        self.df_log.replace(dfx, key=sentinel)
+
+    @staticmethod
+    def _stats_row(spark: SparkSession, row) -> DataFrame:
+        # one partition: a one-row frame must stay one file
+        return spark.range(1, numPartitions=1).select(
+            F.lit(int(row["__n_docs"])).cast("long").alias("__n_docs"),
+            F.lit(int(row["__sum_dl"])).cast("long").alias("__sum_dl"),
         )
 
     def compact_index(self, spark: SparkSession, target_files: int = 1) -> int:
@@ -342,23 +318,16 @@ class StreamingBm25Index:
         sidecars from the compacted postings (the ground truth),
         collapsing their per-batch delta rows to one — this is also
         the heal path should a sidecar ever drift.  Returns the
-        postings row count after compaction.  Crash-safe via
-        streaming/dirswap.py (each directory swap is independently
-        recoverable; a crash between swaps leaves a stale sidecar that
-        the NEXT compaction rebuilds from the already-compacted
-        postings)."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
+        postings row count after compaction.  Crash-safe (each
+        ``BatchLog.replace`` swap is independently recoverable; a crash
+        between swaps leaves a stale sidecar that the NEXT compaction
+        rebuilds from the already-compacted postings)."""
         pos = self.postings_df(spark)
         if pos is None:
             return 0
-        merged = pos.dropDuplicates(["__id", "__tok"]).repartition(target_files)
-        swap_publish(
-            self.postings_dir,
-            lambda tmp: merged.write.mode("overwrite").parquet(tmp),
+        self.postings.replace(
+            pos.dropDuplicates(["__id", "__tok"]).repartition(target_files)
         )
-        # one sentinel delta row covering the whole compacted index;
-        # the batch key is deterministic from the indexed id set
         self._rebuild_sidecars_from_postings(spark)
         return self.postings_df(spark).count()
 
@@ -381,40 +350,6 @@ class StreamingBm25Index:
             .agg(F.count(F.lit(1)).cast("long").alias("__tf"))
         )
 
-    def _batch_key(self, new: DataFrame) -> int:
-        """Deterministic batch identity: xor of the xxhash64 of the
-        batch's DISTINCT NEW (post-anti-join) doc ids — order-free, and
-        a re-delivered batch reproduces it exactly.  The distinct is
-        load-bearing: ``new`` is per-(doc, token) postings rows, so a
-        raw xor would fold each id in once per distinct token and any
-        doc with an even token count would cancel to 0, colliding
-        unrelated batches (and matching compact_index's sentinel, which
-        xors distinct ids).  The one driver-side scalar in the loop
-        (same class as the bloom gauge in bloom_stream.py): one long
-        off a checkpointed batch-sized aggregate, never data."""
-        return (
-            new.select("__id")
-            .distinct()
-            .agg(F.expr("bit_xor(xxhash64(__id))"))
-            .first()[0]
-        )
-
-    def _landed(self, spark: SparkSession, d: str, key: int) -> bool:
-        """Has this batch's append already committed into ``d``?  The
-        match log is partitioned by __batch_key, so its check is a
-        DIRECTORY-NAME lookup — no data scan; the tiny sidecars are
-        read key-column-only."""
-        if d == self.match_dir:
-            return os.path.isdir(os.path.join(d, f"__batch_key={key}"))
-        if not self._has_files(d):
-            return False
-        return (
-            spark.read.parquet(d)
-            .filter(F.col("__batch_key") == key)
-            .take(1)
-            != []
-        )
-
     def process_batch(self, batch_df: DataFrame) -> None:
         """Score one micro-batch against the pre-batch postings, append
         the match log, the sidecar deltas, and the new postings.
@@ -422,20 +357,19 @@ class StreamingBm25Index:
         Idempotency under at-least-once: already-indexed ids are
         dropped first (anti-join on the postings ids), so a FULLY
         COMMITTED batch re-delivers as a complete no-op.  A crash
-        mid-batch re-delivers with the same deterministic batch key,
-        and every append is individually guarded by that key — the
-        match-log partition dir, the sidecar key columns — so
-        re-delivery completes exactly the missing appends, never
-        duplicating a landed one.  The postings append runs LAST as
-        the commit point (its ids are what retires the batch).  The
-        match step materializes BEFORE any append so its lineage reads
-        only pre-batch index files, and its statistics come from the
+        mid-batch re-delivers with the same batch key over the distinct
+        NEW doc ids, and the match log and both sidecars are appended
+        under that key (streaming/batch_log.py), so re-delivery
+        completes exactly the missing appends, never duplicating a
+        landed one.  The postings append runs LAST as the commit point
+        (its ids are what retires the batch).  The match step
+        materializes BEFORE any append so its lineage reads only
+        pre-batch index files, and its statistics come from the
         pre-batch SIDECAR sums — per-batch cost is O(batch + probed
         posting lists), independent of index size."""
         spark = batch_df.sparkSession
         # resume heal BEFORE any guard reads the sidecars: a pre-sidecar
-        # workdir (or a crash between the two sidecar appends) rebuilds
-        # them from the postings ground truth here
+        # workdir rebuilds them from the postings ground truth here
         self._heal_sidecars(spark)
         new = self._prepared(batch_df)
         seen = self.postings_df(spark)
@@ -445,16 +379,14 @@ class StreamingBm25Index:
             )
         # lazy checkpoint: deterministic subtree (tokenize + anti-join
         # over the static pre-batch postings files); materialized by the
-        # batch-key aggregate below BEFORE any append runs, preserving
-        # the old eager guarantee with one driver job instead of three
-        # (eager-materialize + take(1) + key) — r15 verdict item 6
+        # batch-key aggregate below BEFORE any append runs
         new = new.localCheckpoint(eager=False)
-        key = self._batch_key(new)
+        key = batch_key(new, "__id")
         if key is None:
-            # bit_xor over zero rows: fully-committed re-delivery (or
-            # an empty batch) — same exit the old take(1) guard took
-            return
-        if seen is not None and not self._landed(spark, self.match_dir, key):
+            return  # fully-committed re-delivery (or an empty batch)
+        # landed is checked before building the probe: its sidecar
+        # reads cost schema-inference jobs even when the append is skipped
+        if seen is not None and not self.match_log.landed(key):
             # statistics AS OF the pre-batch index, from the sidecars
             q = new.select(F.col("__id").alias("query_id"), "__tok")
             matches = score_against_postings(
@@ -465,33 +397,21 @@ class StreamingBm25Index:
                 dfx=self.sidecar_df(spark),
                 broadcast_query=True,  # a micro-batch IS small
             )
-            (
-                matches.withColumn("__batch_key", F.lit(key))
-                .write.partitionBy("__batch_key")
-                .mode("append")
-                .parquet(self.match_dir)
-            )
-        if not self._landed(spark, self.stats_dir, key):
-            (
-                new.select("__id", "__dl")
-                .distinct()
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("__n_docs"),
-                    F.sum("__dl").cast("long").alias("__sum_dl"),
-                )
-                .withColumn("__batch_key", F.lit(key))
-                .write.mode("append")
-                .parquet(self.stats_dir)
-            )
-        if not self._landed(spark, self.df_dir, key):
-            (
-                new.groupBy("__tok")
-                .agg(F.count(F.lit(1)).cast("long").alias("__df"))
-                .withColumn("__batch_key", F.lit(key))
-                .write.mode("append")
-                .parquet(self.df_dir)
-            )
-        new.write.mode("append").parquet(self.postings_dir)
+            self.match_log.append(matches, key)
+        self.stats_log.append(
+            new.select("__id", "__dl")
+            .distinct()
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("__n_docs"),
+                F.sum("__dl").cast("long").alias("__sum_dl"),
+            ),
+            key,
+        )
+        self.df_log.append(
+            new.groupBy("__tok").agg(F.count(F.lit(1)).cast("long").alias("__df")),
+            key,
+        )
+        self.postings.append(new)
         self._maybe_collapse_sidecars(spark)
 
     def _maybe_collapse_sidecars(self, spark: SparkSession) -> None:
@@ -503,21 +423,16 @@ class StreamingBm25Index:
         and a crash mid-collapse heals via the dirswap.  The collapse
         sums the SIDECARS themselves — sidecar-sized work, never a
         postings scan."""
-        import glob
-
-        n_files = len(glob.glob(os.path.join(self.df_dir, "*.parquet")))
-        if n_files <= self.sidecar_compact_files:
+        if self.df_log.n_files() <= self.sidecar_compact_files:
             return
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         # Materialize the sentinel + sums DRIVER-SIDE before any swap:
-        # the stats frame is lazy, so re-evaluating it after
-        # swap_publish has retired stats_dir would re-scan deleted file
-        # paths (FileNotFoundException on a default session; silently
-        # zero rows + a NULL sentinel under ignoreMissingFiles).  The
-        # collapsed frames below are built purely from these literals.
+        # a lazy stats frame re-evaluated after the stats swap retired
+        # its files would re-scan deleted paths (FileNotFoundException
+        # on a default session; silently zero rows + a NULL sentinel
+        # under ignoreMissingFiles).  The collapsed stats frame is
+        # built purely from these literals.
         row = (
-            spark.read.parquet(self.stats_dir)
+            self.stats_log.read(spark)
             .agg(
                 F.expr("bit_xor(__batch_key)").alias("__batch_key"),
                 F.sum("__n_docs").cast("long").alias("__n_docs"),
@@ -525,26 +440,13 @@ class StreamingBm25Index:
             )
             .first()
         )
-        key = F.lit(int(row["__batch_key"])).cast("long")
-        stats = spark.range(1, numPartitions=1).select(
-            key.alias("__batch_key"),
-            F.lit(int(row["__n_docs"])).cast("long").alias("__n_docs"),
-            F.lit(int(row["__sum_dl"])).cast("long").alias("__sum_dl"),
-        )
-        swap_publish(
-            self.stats_dir,
-            lambda tmp: stats.write.mode("overwrite").parquet(tmp),
-        )
-        # the df collapse reads the OLD df_dir inside write_tmp (still
-        # on disk until its own swap) and stamps the literal sentinel
-        dfx = (
-            spark.read.parquet(self.df_dir)
+        sentinel = int(row["__batch_key"])
+        self.stats_log.replace(self._stats_row(spark, row), key=sentinel)
+        # the df collapse reads the OLD df dir inside its own swap
+        self.df_log.replace(
+            self.df_log.read(spark)
             .groupBy("__tok")
             .agg(F.sum("__df").cast("long").alias("__df"))
-            .select(key.alias("__batch_key"), "__tok", "__df")
-            .coalesce(1)
-        )
-        swap_publish(
-            self.df_dir,
-            lambda tmp: dfx.write.mode("overwrite").parquet(tmp),
+            .coalesce(1),
+            key=sentinel,
         )

@@ -61,6 +61,7 @@ from storm_dynamic_spout_spark.operators.ranking import (
     normalized_strength_report,
     pairwise_win_counts,
 )
+from storm_dynamic_spout_spark.streaming.batch_log import BatchLog
 
 #: MM iterations per micro-batch — warm-started, so a handful per batch
 #: converges across batches (geometric per-iteration contraction).
@@ -85,8 +86,10 @@ class StreamingBradleyTerry:
         iterations: int = BT_STREAM_ITERATIONS,
         pairs_compact_files: int | None = None,
     ) -> None:
-        self.pairs_dir = os.path.join(workdir, "pairs")
-        self.strengths_dir = os.path.join(workdir, "strengths")
+        self.strength_log = BatchLog(os.path.join(workdir, "strengths"))
+        self.pairs = BatchLog(os.path.join(workdir, "pairs"))
+        self.pairs_dir = self.pairs.path
+        self.strengths_dir = self.strength_log.path
         self.meta_path = os.path.join(workdir, "_bt_meta.json")
         self.winner_col = winner_col
         self.loser_col = loser_col
@@ -96,13 +99,6 @@ class StreamingBradleyTerry:
             if pairs_compact_files is None
             else pairs_compact_files
         )
-        os.makedirs(self.pairs_dir, exist_ok=True)
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.strengths_dir)
-        recover_interrupted_swap(self.pairs_dir)
 
     # -- state ---------------------------------------------------------------
 
@@ -118,22 +114,17 @@ class StreamingBradleyTerry:
             json.dump({"last_batch_id": int(batch_id)}, fh)
         os.replace(tmp, self.meta_path)
 
-    def _has_files(self, d: str) -> bool:
-        return os.path.isdir(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        )
-
     def cumulative_pairs(self, spark: SparkSession) -> DataFrame | None:
         """The canonical pair table summed over all committed deltas.
         ``dropDuplicates`` over the full delta row is the idempotency
         repair: a crash-replayed append duplicates rows EXACTLY (same
         batch id, same pair, same counts), so the dedup restores the
         once-only sum."""
-        if not self._has_files(self.pairs_dir):
+        pairs = self.pairs.read(spark)
+        if pairs is None:
             return None
         return (
-            spark.read.parquet(self.pairs_dir)
-            .dropDuplicates(["__batch_id", "item_a", "item_b"])
+            pairs.dropDuplicates(["__batch_id", "item_a", "item_b"])
             .groupBy("item_a", "item_b")
             .agg(
                 F.sum("wins_a").cast("long").alias("wins_a"),
@@ -143,9 +134,7 @@ class StreamingBradleyTerry:
 
     def strengths(self, spark: SparkSession) -> DataFrame | None:
         """Raw micro-unit state (item, __p_micro, as_of_batch)."""
-        if not self._has_files(self.strengths_dir):
-            return None
-        return spark.read.parquet(self.strengths_dir)
+        return self.strength_log.read(spark)
 
     def strengths_report(self, spark: SparkSession) -> DataFrame | None:
         """The normalized (item, strength, n_wins, n_comparisons) view
@@ -184,7 +173,7 @@ class StreamingBradleyTerry:
         delta = pairwise_win_counts(
             batch_df, self.winner_col, self.loser_col
         ).withColumn("__batch_id", F.lit(int(batch_id)).cast("long"))
-        delta.write.mode("append").parquet(self.pairs_dir)
+        self.pairs.append(delta)
         # lineage-truncate once: the cumulative table feeds the item
         # list (2 refs), every MM iteration, and the publish — all
         # pair-vocabulary-sized, but each ref would re-read and re-sum
@@ -215,12 +204,7 @@ class StreamingBradleyTerry:
             "__p_micro",
             F.lit(int(batch_id)).cast("long").alias("as_of_batch"),
         )
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
-        swap_publish(
-            self.strengths_dir,
-            lambda tmp: new_state.write.mode("overwrite").parquet(tmp),
-        )
+        self.strength_log.replace(new_state)
         self._write_marker(batch_id)
         self._maybe_collapse_pairs(spark, batch_id)
         return True
@@ -233,19 +217,10 @@ class StreamingBradleyTerry:
         with the committed ``batch_id`` — is replay-safe.  Work is
         pair-vocabulary-sized; a crash mid-collapse heals via the
         dirswap."""
-        import glob
-
-        n_files = len(glob.glob(os.path.join(self.pairs_dir, "*.parquet")))
-        if n_files <= self.pairs_compact_files:
+        if self.pairs.n_files() <= self.pairs_compact_files:
             return
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
-        folded = (
+        self.pairs.replace(
             self.cumulative_pairs(spark)
             .withColumn("__batch_id", F.lit(int(batch_id)).cast("long"))
             .coalesce(1)
-        )
-        swap_publish(
-            self.pairs_dir,
-            lambda tmp: folded.write.mode("overwrite").parquet(tmp),
         )

@@ -25,8 +25,9 @@ control/state on disk, re-read inside foreachBatch):
   joins against itself (keep-first by id order) before the index join.
 - **At-least-once**: a replayed batch re-matches its own earlier
   signatures; ``seen_id < new_id`` guards plus the exact-id filter make
-  re-delivery idempotent in the dup-log and a no-op in the index
-  (dedup_by_key on append).
+  re-delivery idempotent in the dup-log (the batch-key guard of
+  streaming/batch_log.py) and a no-op in the index (an indexed-id
+  anti-join).
 
 The final dup-log IS SQL-expressible (two staged half-corpus CTEs —
 catalog/llm.py _stream_dedup_sql), so the catalog entry carries a full
@@ -46,6 +47,7 @@ from storm_dynamic_spout_spark.operators.dedup import (
     MINHASH_SEEDS,
     minhash_signature,
 )
+from storm_dynamic_spout_spark.streaming.batch_log import BatchLog, batch_key
 
 _BAND_COLS = [f"band_{b}" for b in range(len(MINHASH_BANDS))]
 _SIG_COLS = [f"minhash_{s}" for s in MINHASH_SEEDS]
@@ -62,42 +64,22 @@ class StreamingDedupIndex:
         min_band_matches: int = 1,
         min_sig_agreement: float = 0.5,
     ) -> None:
-        self.index_dir = os.path.join(workdir, "index")
-        self.dup_dir = os.path.join(workdir, "duplicates")
+        self.index = BatchLog(os.path.join(workdir, "index"))
+        self.dup_log = BatchLog(os.path.join(workdir, "duplicates"))
+        self.index_dir = self.index.path
+        self.dup_dir = self.dup_log.path
         self.id_col = id_col
         self.text_col = text_col
         self.min_band_matches = min_band_matches
         self.min_sig_agreement = min_sig_agreement
-        os.makedirs(self.index_dir, exist_ok=True)
-        os.makedirs(self.dup_dir, exist_ok=True)
-        # heal a crash inside a previous compact_index swap — without
-        # this, the makedirs above would present a silently-empty index
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.index_dir)
 
     # -- state ---------------------------------------------------------------
 
-    def _has_files(self, d: str) -> bool:
-        # the dup log is partitioned by __batch_key (subdirs), the
-        # index dir is flat — walk covers both
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for f in files
-        )
-
     def index_df(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.index_dir):
-            return None
-        return spark.read.parquet(self.index_dir)
+        return self.index.read(spark)
 
     def duplicates(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.dup_dir):
-            return None
-        return spark.read.parquet(self.dup_dir)
+        return self.dup_log.read(spark)
 
     def compact_index(self, spark: SparkSession, target_files: int = 1) -> int:
         """Merge the per-batch signature files (one parquet append per
@@ -106,19 +88,13 @@ class StreamingDedupIndex:
         maintenance window: a concurrent ``process_batch`` would read
         the directory mid-swap. Returns the row count after compaction.
 
-        Crash-safe via streaming/dirswap.py: the constructor heals any
-        interrupted swap, so a crash mid-compaction can never surface
-        as an empty index on restart."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
+        Crash-safe: ``BatchLog.replace`` swaps, and the constructor
+        heals an interrupted swap, so a crash mid-compaction can never
+        surface as an empty index on restart."""
         idx = self.index_df(spark)
         if idx is None:
             return 0
-        merged = idx.dropDuplicates([self.id_col]).repartition(target_files)
-        swap_publish(
-            self.index_dir,
-            lambda tmp: merged.write.mode("overwrite").parquet(tmp),
-        )
+        self.index.replace(idx.dropDuplicates([self.id_col]).repartition(target_files))
         return self.index_df(spark).count()
 
     # -- the per-batch step --------------------------------------------------
@@ -171,26 +147,23 @@ class StreamingDedupIndex:
         materialize BEFORE the index append so their lineage reads the
         pre-append index files.
 
-        Idempotency under at-least-once (round 14, the bm25/ann guard
-        pattern): the dup-log append is guarded by a deterministic
-        batch key (partition-dirname lookup) and the signature append
-        anti-joins already-indexed ids, so BOTH state appends are
-        exactly-once under whole-batch re-delivery and every
+        Idempotency under at-least-once: the dup-log append is guarded
+        by the batch key (streaming/batch_log.py) and the signature
+        append anti-joins already-indexed ids, so BOTH state appends
+        are exactly-once under whole-batch re-delivery and every
         crash-between-appends window.  ``sink(unique_docs)`` is the one
-        at-least-once edge: a replay re-invokes it with the identical
-        unique set — downstream sinks idempote on doc id (the standard
-        foreachBatch contract)."""
+        at-least-once edge.  A crash re-delivers the batch before any
+        later batch runs, and the replay hands the sink the identical
+        unique set.  Re-delivering a batch AFTER later batches were
+        indexed hands the sink a SUBSET of the first delivery's unique
+        set and never a new id: docs indexed later with a LOWER id now
+        count as earlier near-dups.  Downstream sinks idempote on doc
+        id (the standard foreachBatch contract)."""
         spark = batch_df.sparkSession
         sig = minhash_signature(batch_df, self.id_col, self.text_col)
-        # deterministic batch identity over the batch's distinct ids —
-        # dedup cannot anti-join the whole batch away (dup docs never
-        # enter the index), so the key is over the FULL batch
-        key = (
-            batch_df.select(self.id_col)
-            .distinct()
-            .agg(F.expr(f"bit_xor(xxhash64({self.id_col}))"))
-            .first()[0]
-        )
+        # the key is over the FULL batch: dedup cannot anti-join the
+        # whole batch away (dup docs never enter the index)
+        key = batch_key(batch_df, self.id_col)
         if key is None:
             return  # empty batch
         seen = self.index_df(spark)
@@ -226,18 +199,12 @@ class StreamingDedupIndex:
         dup_ids = best.select(F.col("__new_id").alias(self.id_col))
         unique = batch_df.join(dup_ids, self.id_col, "left_anti")
         sink(unique)
-        if not os.path.isdir(
-            os.path.join(self.dup_dir, f"__batch_key={key}")
-        ):
-            dup_log = batch_df.join(
-                best, batch_df[self.id_col] == best["__new_id"]
-            ).select(self.id_col, "matched_id", "agreement")
-            (
-                dup_log.withColumn("__batch_key", F.lit(int(key)).cast("long"))
-                .write.partitionBy("__batch_key")
-                .mode("append")
-                .parquet(self.dup_dir)
-            )
+        self.dup_log.append(
+            batch_df.join(best, batch_df[self.id_col] == best["__new_id"]).select(
+                self.id_col, "matched_id", "agreement"
+            ),
+            key,
+        )
         # UNIQUE docs' signatures enter the index (duplicates must not:
         # a dup matching a dup would chain clusters through the log);
         # the anti-join on already-indexed ids makes this append — the
@@ -247,4 +214,4 @@ class StreamingDedupIndex:
             unique_sig = unique_sig.join(
                 seen.select(self.id_col), self.id_col, "left_anti"
             )
-        unique_sig.write.mode("append").parquet(self.index_dir)
+        self.index.append(unique_sig)

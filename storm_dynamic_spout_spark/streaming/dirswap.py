@@ -39,8 +39,14 @@ def _complete(d: str) -> bool:
     return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
 
 
+def n_parquet_files(d: str) -> int:
+    """Parquet files under ``d``, partition subdirectories included
+    (0 for a missing directory)."""
+    return sum(f.endswith(".parquet") for _, _, files in os.walk(d) for f in files)
+
+
 def _has_data(d: str) -> bool:
-    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
+    return n_parquet_files(d) > 0
 
 
 def swap_publish(live_dir: str, write_tmp: Callable[[str], None]) -> None:

@@ -60,9 +60,12 @@ class FilterChain:
         (e.g. ``key = 'x'`` over a null key) must count as "not dropped".
         This makes keep()/drop() an exact partition of every input row —
         a row is delivered by exactly one of firehose or sideline replay.
+
+        Iterates a snapshot: sideline START/RESOLVE mutate the published
+        chain from another thread while a batch builds this column.
         """
         cond = F.lit(False)
-        for sql in self._steps.values():
+        for sql in list(self._steps.values()):
             cond = cond | F.coalesce(F.expr(sql), F.lit(False))
         return cond
 

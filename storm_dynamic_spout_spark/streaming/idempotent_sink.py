@@ -1,17 +1,15 @@
 """Engine-owned exactly-once parquet sink for the stateful streams.
 
-Round 14 made every streaming index EXACTLY-ONCE on its *state* under
+Every streaming index is EXACTLY-ONCE on its *state* under
 at-least-once delivery, but the ``sink(batch_df)`` callbacks the
-streams invoke stayed at-least-once by contract: a replayed batch
-re-invokes the callback with the identical rows, and idempotence was
-the downstream's problem (SEMANTICS row 11).  This helper closes that
-last edge for the common case — "write the stream's output to a
-parquet table" — with the SAME deterministic batch-key partition guard
-the state appends use (streaming/dedup_stream.py process_batch /
-bm25_stream.py _landed): the batch's distinct ids fold to a key via
-``bit_xor(xxhash64(id))``, rows land under a ``__batch_key=<key>``
-partition directory, and a re-delivered batch whose partition dir
-already exists is skipped without reading a row.
+streams invoke stay at-least-once by contract: a replayed batch
+re-invokes the callback, and idempotence is the downstream's problem
+(SEMANTICS row 11).  This helper closes that last edge for the common
+case — "write the stream's output to a parquet table" — with the SAME
+batch-key guard the state appends use (streaming/batch_log.py): the
+batch's distinct ids fold to a key, rows land under a
+``__batch_key=<key>`` partition directory, and a re-delivered batch
+whose partition dir already exists is skipped without reading a row.
 
 Custom callbacks keep the documented at-least-once contract; this is
 the opt-in engine-owned alternative, usable directly as the ``sink``
@@ -22,82 +20,44 @@ argument of every stream's ``process_batch``:
     idx.process_batch(batch, sink)       # no duplicate rows
 
 Why the guard is sound here: the key is a pure function of the sink
-input's distinct ids, and every stream's sink input is itself a pure
-function of the delivered batch (the round-15 dedup fix made the
-unique set replay-stable for every configuration), so a re-delivery
-recomputes the same key.  Distinct-id XOR (not raw-row XOR) keeps the
-r13 BM25 lesson: duplicate rows XOR-cancel pairwise and would collide
-distinct batches.
+input's distinct ids, and a crash re-delivers a batch before any later
+batch runs, so every stream recomputes the identical sink input and
+the same key.  (Re-delivering an already-committed batch AFTER later
+batches is outside that contract: the dedup stream's unique set may
+then shrink — SEMANTICS row 11 — and the smaller set lands under a new
+key.)
 
-At 100 TB: one extra one-scalar aggregate per micro-batch (the
-bloom-gauge class — batch-sized, never state-sized), a driver dirname
-``os.path.isdir`` per delivery, and the write itself is the append the
-caller was already paying.  Partition count grows by one directory per
-batch; fold with :meth:`compact` in the same maintenance window the
-indexes use.
+At 100 TB: one extra one-scalar aggregate per micro-batch (batch-sized,
+never state-sized), a driver dirname lookup per delivery, and the
+write itself is the append the caller was already paying.  Partition
+count grows by one directory per batch; fold with :meth:`compact` in
+the same maintenance window the indexes use.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from storm_dynamic_spout_spark.streaming.batch_log import KEY_COL, BatchLog, batch_key
 
 
 class IdempotentParquetSink:
     """Batch-key-guarded parquet appender; call it like a sink."""
 
-    BATCH_KEY_COL = "__batch_key"
-
     def __init__(self, out_dir: str, id_col: str = "doc_id") -> None:
         self.out_dir = out_dir
         self.id_col = id_col
-        os.makedirs(out_dir, exist_ok=True)
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.out_dir)
-
-    # -- the sink contract ---------------------------------------------------
+        self.log = BatchLog(out_dir)
 
     def __call__(self, batch_df: DataFrame) -> None:
-        key = (
-            batch_df.select(self.id_col)
-            .distinct()
-            .agg(F.expr(f"bit_xor(xxhash64({self.id_col}))"))
-            .first()[0]
-        )
-        if key is None:
-            return  # empty batch: nothing to land, nothing to guard
-        if os.path.isdir(
-            os.path.join(self.out_dir, f"{self.BATCH_KEY_COL}={key}")
-        ):
-            return  # re-delivery: the batch already landed
-        (
-            batch_df.withColumn(
-                self.BATCH_KEY_COL, F.lit(int(key)).cast("long")
-            )
-            .write.partitionBy(self.BATCH_KEY_COL)
-            .mode("append")
-            .parquet(self.out_dir)
-        )
-
-    # -- reads + maintenance -------------------------------------------------
-
-    def _has_files(self, d: str) -> bool:
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for f in files
-        )
+        key = batch_key(batch_df, self.id_col)
+        if key is not None:  # empty batch: nothing to land, nothing to guard
+            self.log.append(batch_df, key)
 
     def rows(self, spark: SparkSession) -> "DataFrame | None":
         """Everything landed so far, without the guard column."""
-        if not self._has_files(self.out_dir):
-            return None
-        return spark.read.parquet(self.out_dir).drop(self.BATCH_KEY_COL)
+        df = self.log.read(spark)
+        return None if df is None else df.drop(KEY_COL)
 
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
         """Fold the per-batch partition dirs into ``target_files`` flat
@@ -111,14 +71,8 @@ class IdempotentParquetSink:
         committed batch, so no pre-compaction batch can replay into
         the fresh namespace.  Crash-safe via dirswap; returns the row
         count."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         rows = self.rows(spark)
         if rows is None:
             return 0
-        merged = rows.repartition(target_files)
-        swap_publish(
-            self.out_dir,
-            lambda tmp: merged.write.mode("overwrite").parquet(tmp),
-        )
-        return spark.read.parquet(self.out_dir).count()
+        self.log.replace(rows.repartition(target_files))
+        return self.log.read(spark).count()

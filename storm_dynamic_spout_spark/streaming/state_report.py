@@ -6,26 +6,19 @@ report is the policy signal an operator watches to schedule the
 maintenance window, per state table: delta-file count, row count, and
 whether the configured compaction threshold is breached.
 
-Scale shape: the state dirs are METADATA-sized (file listings walk the
-driver's filesystem view — the same os.walk the indexes' own guards
-use), and the row counts are parquet-footer COUNT(*) scans that never
-materialize the data.  Nothing here touches the corpus.
+Scale shape: the state dirs are METADATA-sized (file counts walk the
+driver's filesystem view — the same walk ``BatchLog.n_files`` uses),
+and the row counts are parquet-footer COUNT(*) scans that never
+materialize the data.  Nothing here touches the corpus.  The report
+only reads: it does not open a ``BatchLog``, whose constructor heals an
+interrupted swap — a write that must not race a writer's own swap.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _parquet_files(d: str) -> list[str]:
-    return sorted(
-        os.path.join(root, f)
-        for root, _, files in os.walk(d)
-        for f in files
-        if f.endswith(".parquet")
-    )
+from storm_dynamic_spout_spark.streaming.dirswap import n_parquet_files
 
 
 def state_table_report(
@@ -45,19 +38,9 @@ def state_table_report(
     parquet metadata (COUNT(*) over footers) — no data scan."""
     rows = []
     for name in sorted(tables):
-        files = _parquet_files(tables[name])
-        if files:
-            n_rows = spark.read.parquet(tables[name]).count()
-        else:
-            n_rows = 0
-        rows.append(
-            (
-                name,
-                len(files),
-                int(n_rows),
-                len(files) > compact_threshold,
-            )
-        )
+        n_files = n_parquet_files(tables[name])
+        n_rows = spark.read.parquet(tables[name]).count() if n_files else 0
+        rows.append((name, n_files, int(n_rows), n_files > compact_threshold))
     return spark.createDataFrame(
         rows,
         "table string, n_files long, n_rows long, needs_compaction boolean",

@@ -100,56 +100,3 @@ def test_compact_index_preserves_matching(spark):
         (r["query_id"], r["neighbor_id"], r["rank"]) for r in after.collect()
     } - before
     assert all(q >= 120 and n2 < 120 for q, n2, _ in new_rows)
-
-
-def test_crash_between_match_and_index_append_redelivers_cleanly(spark):
-    """The round-14 guard (the bm25_stream pattern ported): a crash
-    AFTER the match-log append but BEFORE the index append (the commit
-    point) re-delivers the batch — the already-landed match partition
-    is skipped via the batch-key dirname guard, and only the missing
-    index append completes.  No duplicate match rows, index ids exactly
-    the union of the batches."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from storm_dynamic_spout_spark.engine import load_table
-    from storm_dynamic_spout_spark.streaming.ann_stream import StreamingAnnIndex
-
-    workdir = tempfile.mkdtemp(prefix="ann-crash-")
-    idx = StreamingAnnIndex(workdir)
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    b1 = e.filter(F.col("vec_id") < 30)
-    b2 = e.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 60))
-    idx.process_batch(b1)
-    files_after_b1 = set(glob.glob(os.path.join(idx.index_dir, "*.parquet")))
-    idx.process_batch(b2)
-    m_before = sorted(
-        (r["query_id"], r["neighbor_id"], r["rank"], r["cos"])
-        for r in idx.matches(spark).collect()
-    )
-    assert m_before, "batch 2 found no neighbors?"
-    # simulate the crash: roll the INDEX back to the pre-b2 state while
-    # the match partition for b2 stays on disk
-    for f in (
-        set(glob.glob(os.path.join(idx.index_dir, "*.parquet")))
-        - files_after_b1
-    ):
-        os.remove(f)
-    assert idx.index_df(spark).select("__id").distinct().count() == 30
-
-    idx.process_batch(b2)  # re-delivery completes the commit
-    assert idx.index_df(spark).select("__id").distinct().count() == 60
-    m_after = sorted(
-        (r["query_id"], r["neighbor_id"], r["rank"], r["cos"])
-        for r in idx.matches(spark).collect()
-    )
-    assert m_after == m_before, "match rows duplicated on re-delivery"
-    # and a THIRD delivery of the now-committed batch is a full no-op
-    idx.process_batch(b2)
-    assert idx.matches(spark).count() == len(m_before)
-    assert idx.index_df(spark).count() == 60
-    shutil.rmtree(workdir)

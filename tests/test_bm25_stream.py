@@ -11,6 +11,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.engine import load_table
+from storm_dynamic_spout_spark.streaming.batch_log import batch_key
 from storm_dynamic_spout_spark.streaming.bm25_stream import StreamingBm25Index
 
 SF = "/root/testdata/sf0.001"
@@ -189,53 +190,6 @@ def test_sidecar_tracks_postings_across_batches_and_compaction(spark):
     _sidecar_equals_postings_derived(spark, idx)
 
 
-def test_crash_before_postings_commit_redelivers_without_duplicates(spark):
-    """The mid-batch crash window the round-12 advice flagged: matches
-    and sidecar deltas landed but the postings append (the commit
-    point) did not.  Re-delivery must complete exactly the missing
-    postings append — no duplicate match rows, no double-counted
-    sidecar deltas."""
-    import glob
-    import os
-    import shutil
-
-    workdir = tempfile.mkdtemp(prefix="bm25-t8-")
-    idx = StreamingBm25Index(workdir)
-    d = _docs(spark)
-    b1 = d.filter(F.col("doc_id") < 20)
-    b2 = d.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 40))
-    idx.process_batch(b1)
-    pos_files_after_b1 = set(glob.glob(os.path.join(idx.postings_dir, "*.parquet")))
-    idx.process_batch(b2)
-
-    m_before = sorted(
-        (r["query_id"], r["doc_id"], r["rank"], r["score"])
-        for r in idx.matches(spark).collect()
-    )
-    stats_before = idx.sidecar_stats(spark).first()
-
-    # simulate the crash: roll the postings back to the pre-b2 state
-    for f in set(glob.glob(os.path.join(idx.postings_dir, "*.parquet"))) - pos_files_after_b1:
-        os.remove(f)
-    assert idx.postings_df(spark).select("__id").distinct().count() == 20
-
-    # re-delivery heals: postings complete, nothing else duplicated
-    idx.process_batch(b2)
-    assert idx.postings_df(spark).select("__id").distinct().count() == 40
-    m_after = sorted(
-        (r["query_id"], r["doc_id"], r["rank"], r["score"])
-        for r in idx.matches(spark).collect()
-    )
-    assert m_after == m_before
-    stats_after = idx.sidecar_stats(spark).first()
-    assert (stats_after["__n_docs"], stats_after["__sum_dl"]) == (
-        stats_before["__n_docs"],
-        stats_before["__sum_dl"],
-    )
-    _sidecar_equals_postings_derived(spark, idx)
-    shutil.rmtree(workdir)
-
-
 def test_probe_plan_reads_sidecar_not_postings_for_stats(spark):
     """Scale guard: with injected sidecar statistics the probe plan
     must scan the postings exactly once (the probe join) — the
@@ -276,7 +230,6 @@ def test_sidecar_auto_collapse_keeps_invariants(spark):
     """With a tiny collapse threshold, many small batches must keep the
     df sidecar's file count bounded while the sidecar sums stay equal
     to the postings-derived statistics — and scoring keeps working."""
-    import glob
     import os
 
     idx = StreamingBm25Index(
@@ -286,7 +239,11 @@ def test_sidecar_auto_collapse_keeps_invariants(spark):
     for k in range(6):
         idx.process_batch(d.filter(F.col("doc_id") % 6 == k))
         _sidecar_equals_postings_derived(spark, idx)
-    n_df_files = len(glob.glob(os.path.join(idx.df_dir, "*.parquet")))
+    # the df sidecar is partitioned by batch key: count recursively
+    n_df_files = sum(
+        f.endswith(".parquet") for _, _, fs in os.walk(idx.df_dir) for f in fs
+    )
+    assert n_df_files >= 1, "df sidecar holds no files"
     assert n_df_files <= 3, f"sidecar never collapsed: {n_df_files} files"
     # the match log kept growing across the collapses
     assert idx.matches(spark).count() > 0
@@ -302,14 +259,14 @@ def test_batch_key_uses_distinct_ids_not_postings_rows(spark):
     doc with an even distinct-token count folded in an even number of
     times and cancelled to 0 — two unrelated single-doc batches both
     keyed to 0, and the second batch's sidecar/match appends were
-    silently skipped via the _landed guard while its postings landed,
+    silently skipped via the landed guard while its postings landed,
     permanently corrupting N/Σdl/df."""
     idx = StreamingBm25Index(tempfile.mkdtemp(prefix="bm25-t11-"))
     # two different docs, each with exactly 2 distinct tokens (even)
     b1 = spark.createDataFrame([(1, "alpha beta")], "doc_id int, text string")
     b2 = spark.createDataFrame([(2, "alpha gamma")], "doc_id int, text string")
-    k1 = idx._batch_key(idx._prepared(b1))
-    k2 = idx._batch_key(idx._prepared(b2))
+    k1 = batch_key(idx._prepared(b1), "__id")
+    k2 = batch_key(idx._prepared(b2), "__id")
     assert k1 != k2, "even-token-count batches collided on the batch key"
     idx.process_batch(b1)
     idx.process_batch(b2)
@@ -386,5 +343,32 @@ def test_resume_pre_sidecar_workdir_heals_from_postings(spark):
         d.filter((F.col("doc_id") >= 30) & (F.col("doc_id") < 40))
     )
     assert resumed.matches(spark).count() > n
+    _sidecar_equals_postings_derived(spark, resumed)
+    shutil.rmtree(workdir)
+
+
+def test_resume_flat_sidecar_workdir_rekeys_the_sidecars(spark):
+    """A workdir whose sidecars hold flat files (written before the
+    sidecars were keyed by batch) must be rebuilt before the first keyed
+    append: Spark's partition discovery skips flat files that sit
+    beside partition directories, so the old deltas would silently
+    drop out of N/Σdl/df."""
+    import os
+    import shutil
+
+    workdir = tempfile.mkdtemp(prefix="bm25-t14-")
+    idx = StreamingBm25Index(workdir)
+    d = _docs(spark)
+    idx.process_batch(d.filter(F.col("doc_id") < 15))
+    idx.process_batch(d.filter((F.col("doc_id") >= 15) & (F.col("doc_id") < 30)))
+    for dpath in (idx.stats_dir, idx.df_dir):
+        flat = dpath + "-flat"
+        spark.read.parquet(dpath).write.parquet(flat)
+        shutil.rmtree(dpath)
+        os.rename(flat, dpath)
+    resumed = StreamingBm25Index(workdir)
+    resumed.process_batch(
+        d.filter((F.col("doc_id") >= 30) & (F.col("doc_id") < 40))
+    )
     _sidecar_equals_postings_derived(spark, resumed)
     shutil.rmtree(workdir)

@@ -38,6 +38,51 @@ def test_readme_tables_are_in_sync():
     )
 
 
+def test_config_table_is_the_same_on_every_host():
+    """The generated config table renders the static defaults: the
+    SPARK_GRAFT_* environment applies when an EngineConfig is built,
+    not when the engine module is imported."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "from storm_dynamic_spout_spark.documentation import config_table; "
+        "print(config_table())"
+    )
+    renders = [
+        subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=REPO,
+            env=dict(os.environ, SPARK_GRAFT_CPUS=cpus),
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        for cpus in ("3", "64")
+    ]
+    assert renders[0] == renders[1]
+    assert "`\"local[32]\"`" in renders[0]
+
+
+def test_engine_config_reads_the_environment_when_built(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    cfg = EngineConfig()
+    assert cfg["spark.master"] == "local[3]"
+    assert cfg["spark.shuffle_partitions"] == 3
+    assert cfg["spark.driver_memory"] == "2g"
+    monkeypatch.setenv("SPARK_GRAFT_MASTER", "local[2]")
+    assert EngineConfig()["spark.master"] == "local[2]"
+    # explicit values win over the environment
+    assert EngineConfig({"spark.master": "local[1]"})["spark.master"] == "local[1]"
+    monkeypatch.delenv("SPARK_GRAFT_MASTER")
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    assert EngineConfig()["spark.master"] == DEFAULTS["spark.master"] == "local[32]"
+
+
 def test_survey_catalog_count_matches_registry():
     """SURVEY.md §8's catalog-size claim drifts when queries are added
     without touching the doc (the r7 judge found it 43 stale) — pin it

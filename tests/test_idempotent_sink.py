@@ -1,6 +1,7 @@
 """IdempotentParquetSink (r14 verdict item 4): the engine-owned sink
 that closes the last at-least-once edge — sink callbacks under
-whole-batch re-delivery and the crash-between-appends window."""
+whole-batch re-delivery.  The crash-between-appends windows of the
+sink driven by the dedup stream are swept in tests/test_batch_log.py."""
 
 from __future__ import annotations
 
@@ -9,15 +10,12 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from storm_dynamic_spout_spark.streaming.dedup_stream import StreamingDedupIndex
 from storm_dynamic_spout_spark.streaming.idempotent_sink import (
     IdempotentParquetSink,
 )
 
 DOC_A = "the quick brown fox jumps over the lazy dog near the river bank today"
-DOC_A_NEAR = "the quick brown fox jumps over the lazy dog near the river bank tonight"
 DOC_B = "spark shuffles hash partitions across executors while catalyst optimizes plans"
-DOC_C = "completely different text about training data pipelines and tokenizers here"
 
 
 def _docs_df(spark, rows):
@@ -61,46 +59,6 @@ def test_empty_batch_is_a_noop(spark, tmp_path):
     sink = IdempotentParquetSink(str(tmp_path / "out"))
     sink(_docs_df(spark, []))
     assert sink.rows(spark) is None
-
-
-def test_crash_between_sink_and_state_append_redelivers_cleanly(
-    spark, tmp_path
-):
-    """The end-to-end exactly-once scenario the helper exists for:
-    drive the dedup stream with the engine sink, crash AFTER the sink
-    append landed but BEFORE the index append (roll the index back),
-    re-deliver the whole batch — the sink table must hold each unique
-    doc exactly once and the state must complete."""
-    index = StreamingDedupIndex(str(tmp_path / "dd"))
-    sink = IdempotentParquetSink(str(tmp_path / "out"))
-    index.process_batch(_docs_df(spark, [(0, DOC_A), (1, DOC_B)]), sink)
-
-    batch2 = _docs_df(spark, [(2, DOC_A_NEAR), (4, DOC_C)])
-    idx_files_before = {
-        os.path.join(r, f)
-        for r, _, fs in os.walk(index.index_dir)
-        for f in fs
-    }
-    index.process_batch(batch2, sink)
-    rows_after_first = _rows(spark, sink)
-    assert [i for i, _ in rows_after_first] == [0, 1, 4]  # 2 is a dup of 0
-
-    # crash window: the index append (the commit point) is lost
-    for f in {
-        os.path.join(r, f)
-        for r, _, fs in os.walk(index.index_dir)
-        for f in fs
-    } - idx_files_before:
-        os.remove(f)
-
-    index.process_batch(batch2, sink)  # re-delivery completes the commit
-    assert _rows(spark, sink) == rows_after_first, (
-        "re-delivery duplicated sink rows"
-    )
-    idx_ids = {
-        r["doc_id"] for r in index.index_df(spark).select("doc_id").collect()
-    }
-    assert idx_ids == {0, 1, 4}
 
 
 def test_compact_folds_partitions_and_preserves_rows(spark, tmp_path):

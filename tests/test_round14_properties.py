@@ -57,6 +57,10 @@ def _walk_files(d):
     }
 
 
+def _partition_dirs(d):
+    return {p for p in os.listdir(d) if os.path.isdir(os.path.join(d, p))}
+
+
 def _assert_sidecars_match_postings(spark, idx):
     pos = idx.postings_df(spark)
     if pos is None:
@@ -106,20 +110,9 @@ def test_bm25_sidecar_invariant_under_any_writer_schedule(
             elif op == "crash_replay":
                 slice_k, landed = k
                 b = docs.filter(F.col("doc_id") % 5 == slice_k)
-                dirs = {
-                    d: _walk_files(d)
-                    for d in (
-                        idx.postings_dir,
-                        idx.match_dir,
-                        idx.stats_dir,
-                        idx.df_dir,
-                    )
-                }
-                match_dirs_before = {
-                    d2
-                    for d2 in os.listdir(idx.match_dir)
-                    if os.path.isdir(os.path.join(idx.match_dir, d2))
-                }
+                postings_before = _walk_files(idx.postings_dir)
+                keyed = (idx.match_dir, idx.stats_dir, idx.df_dir)
+                parts_before = {d: _partition_dirs(d) for d in keyed}
                 # the crash happens BEFORE the postings commit point,
                 # so the post-commit auto-collapse never ran: suppress
                 # it for the crashed delivery only
@@ -129,25 +122,15 @@ def test_bm25_sidecar_invariant_under_any_writer_schedule(
                 idx.sidecar_compact_files = saved
                 # roll back to the chosen crash point (append order:
                 # matches, stats, df, postings)
-                rollback = [idx.postings_dir]
-                if landed < 3:
-                    rollback.append(idx.df_dir)
-                if landed < 2:
-                    rollback.append(idx.stats_dir)
-                for d in rollback:
-                    for f in _walk_files(d) - dirs[d]:
-                        os.remove(f)
-                if landed < 1:
-                    # the match log is partitioned by batch key: remove
-                    # the whole new partition dirs (a half-empty dir
-                    # would read as landed to the dirname guard)
-                    new_parts = {
-                        d2
-                        for d2 in os.listdir(idx.match_dir)
-                        if os.path.isdir(os.path.join(idx.match_dir, d2))
-                    } - match_dirs_before
-                    for sub in new_parts:
-                        shutil.rmtree(os.path.join(idx.match_dir, sub))
+                for f in _walk_files(idx.postings_dir) - postings_before:
+                    os.remove(f)
+                # the match log and both sidecars are partitioned by
+                # batch key: remove the whole new partition dirs (a
+                # half-empty dir would read as landed to the dirname
+                # guard)
+                for d in keyed[landed:]:
+                    for sub in _partition_dirs(d) - parts_before[d]:
+                        shutil.rmtree(os.path.join(d, sub))
                 idx.process_batch(b)  # re-delivery completes the commit
             elif op == "compact":
                 idx.compact_index(spark, target_files=1)

@@ -134,6 +134,33 @@ def test_filter_chain_mutation_and_json_roundtrip():
     assert not restored.has_step("a")
 
 
+def test_filter_chain_steps_can_change_while_building_the_condition(
+    spark, monkeypatch
+):
+    """Sideline START/RESOLVE add and remove steps on the published
+    chain from the main thread while the stream thread builds the drop
+    condition.  Here the mutation lands deterministically inside the
+    build (on its first F.expr call): the build must finish over the
+    steps it started with instead of raising "dictionary changed size
+    during iteration"."""
+    from storm_dynamic_spout_spark.streaming import filter_chain
+
+    chain = FilterChain({"a": "user_id = 1", "b": "value < 0"})
+    real_expr = filter_chain.F.expr
+    calls = []
+
+    def expr(sql):
+        if not calls:
+            chain.add_step("c", "user_id = 2")
+        calls.append(sql)
+        return real_expr(sql)
+
+    monkeypatch.setattr(filter_chain.F, "expr", expr)
+    chain.drop_condition()
+    assert calls == ["user_id = 1", "value < 0"]
+    assert chain.has_step("c")
+
+
 # -- cluster sizing arithmetic ----------------------------------------------
 
 

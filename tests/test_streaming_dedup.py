@@ -178,40 +178,3 @@ def test_compact_index_merges_files_and_preserves_matching(spark, index):
     assert out == []
     dups = {r["doc_id"]: r["matched_id"] for r in index.duplicates(spark).collect()}
     assert dups == {9: 0}
-
-
-def test_crash_between_duplog_and_index_append_redelivers_cleanly(spark, tmp_path):
-    """Round-14 guard: a crash AFTER the dup-log append but BEFORE the
-    signature append (the commit point) re-delivers the batch — the
-    landed dup partition is skipped via the batch-key dirname guard and
-    only the missing signature append completes.  No duplicate dup
-    rows, index ids exactly the unique docs."""
-    import glob
-    import os
-
-    index = StreamingDedupIndex(str(tmp_path / "dd"))
-    index.process_batch(_docs_df(spark, [(0, DOC_A)]), lambda df: df.count())
-    idx_files_b1 = set(glob.glob(os.path.join(index.index_dir, "*.parquet")))
-    batch2 = _docs_df(spark, [(2, DOC_A_NEAR), (4, DOC_C)])
-    index.process_batch(batch2, lambda df: df.count())
-    dups_before = sorted(
-        (r["doc_id"], r["matched_id"]) for r in index.duplicates(spark).collect()
-    )
-    assert dups_before == [(2, 0)]
-    # crash: roll the index back to pre-batch-2 while the dup partition stays
-    for f in (
-        set(glob.glob(os.path.join(index.index_dir, "*.parquet"))) - idx_files_b1
-    ):
-        os.remove(f)
-    ids = {r["doc_id"] for r in index.index_df(spark).select("doc_id").collect()}
-    assert ids == {0}
-
-    index.process_batch(batch2, lambda df: df.count())  # re-delivery
-    ids = {r["doc_id"] for r in index.index_df(spark).select("doc_id").collect()}
-    assert ids == {0, 4}  # the unique doc committed; the dup never enters
-    dups_after = sorted(
-        (r["doc_id"], r["matched_id"]) for r in index.duplicates(spark).collect()
-    )
-    assert dups_after == dups_before, "dup rows duplicated on re-delivery"
-    # index rows exactly one signature per unique id (no duplicates)
-    assert index.index_df(spark).count() == 2
